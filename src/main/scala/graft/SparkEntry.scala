@@ -2988,12 +2988,13 @@ object SparkEntry {
     }),
 
     "netcdf4_export_roundtrip" -> ((s, dir) => {
-      // the DISTRIBUTED NetCDF-4 export: executors deflate chunk
-      // blobs, the driver streams metadata + sidecars (NetCDF4
-      // .writeTableDistributed), then the dual-format DSv2 reads the
-      // file back — hash-checked against the same computation on the
-      // parquet source, so the whole executor-side compress/assemble
-      // cycle is oracle-verified
+      // the DISTRIBUTED NetCDF-4 export (NetCDF4
+      // .writeTableDistributed): the plan runs once into column
+      // segments, one executor task per chunk deflates its rows, the
+      // driver streams metadata + chunk sidecars; then the dual-format
+      // DSv2 reads the file back — hash-checked against the same
+      // computation on the parquet source, so the whole segment /
+      // compress / assemble cycle is oracle-verified
       val src = t(s, dir, "orders").orderBy("o_orderkey").limit(2000)
         .select(col("o_orderkey").cast("double").as("o_orderkey"),
           col("o_totalprice").cast("double").as("o_totalprice"))

@@ -241,10 +241,11 @@ object NetCDF3 {
    * size, and returns the per-variable begin offsets — classic slabs
    * are offset-addressed, so parallel writers can then fill DISJOINT
    * row ranges at `begin + rowStart*8` without coordination. This is
-   * the scale path for `oph_exportnc`: the driver never buffers the
-   * data, executors stream their partitions straight into the file
-   * (single-file classic output assumes a shared filesystem, exactly
-   * like the reference's server-side export directory).
+   * the scale path for `oph_exportnc` ([[writeTableDistributed]]):
+   * the driver never buffers the data, executors stream their
+   * segments straight into the file (single-file classic output
+   * assumes a shared filesystem, exactly like the reference's
+   * server-side export directory).
    */
   def writeTableHeader(path: String,
       dims: Seq[Dim],
@@ -343,6 +344,57 @@ object NetCDF3 {
         off += n
       }
     } finally raf.close()
+  }
+
+  /**
+   * DISTRIBUTED table export — the `.nc` path of `oph_exportnc`: every
+   * column of `df` (all DoubleType) becomes a fixed double variable
+   * over one `row` dimension. The input plan runs ONCE, in the segment
+   * pass ([[ColumnSegments]]), which spills each partition
+   * column-major and returns its row count. The driver then sizes the
+   * file, writes its header ([[writeTableHeader]]) and derives each
+   * segment's first row; one task per non-empty segment fills that
+   * segment's rows of every variable with [[writeSlab]] — disjoint
+   * ranges, so writers never overlap. Same shared-filesystem
+   * assumption as the segments. Returns the exported row count.
+   */
+  def writeTableDistributed(df: org.apache.spark.sql.DataFrame,
+      out: String, gatts: Seq[(String, String)] = Seq.empty): Long = {
+    val names = df.columns.toSeq
+    ColumnSegments.withSegments(df, out) { segs =>
+      val total = segs.total
+      if (total > Int.MaxValue - 8)
+        throw new FormatError(s"exportnc: $total rows exceed the classic " +
+          "'row' dimension; split the cube first")
+      if (total == 0)
+        // a zero-length FIXED dim would parse as the record dim, so the
+        // empty table goes through the driver-side writer
+        write(out, Seq(Dim("row", 0)),
+          names.map(n => (n, Seq(0), Array.empty[Double])), gatts = gatts)
+      else {
+        val begins = writeTableHeader(out, Seq(Dim("row", total.toInt)),
+          names.map(n => (n, Seq(0))), gatts)
+        val nVars = names.size
+        val filled = segs.segs.indices.filter(segs.segs(_).rows > 0)
+        df.sparkSession.sparkContext.parallelize(filled, filled.size)
+          .foreach { i =>
+            val rows = segs.segs(i).rows
+            var j = 0
+            while (j < nVars) {
+              // 2M-row slabs: bounded buffers for any partition size
+              var off = 0L
+              while (off < rows) {
+                val n = math.min(rows - off, 2L * 1024 * 1024).toInt
+                writeSlab(out, begins(j), segs.starts(i) + off,
+                  segs.readColumn(i, j, off, n))
+                off += n
+              }
+              j += 1
+            }
+          }
+      }
+      total
+    }
   }
 
   /** Write a classic file of double variables over shared dimensions;

@@ -4,6 +4,8 @@ import java.io.{ByteArrayOutputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.Deflater
 
+import org.apache.spark.TaskContext
+
 /**
  * NetCDF-4 — the netCDF data model carried in HDF5 — on top of the
  * pure-JVM [[Hdf5]] subset. Maps the public netCDF-4 on-disk
@@ -188,26 +190,26 @@ object NetCDF4 {
   }
 
   /** Deflate one chunk's values (padding to the full chunk cell count
-    * — HDF5 stores full edge chunks), optionally byte-shuffled first
-    * and fletcher32-checksummed (write pipeline [shuffle,] [fletcher,]
-    * deflate — the netcdf-c filter order, so external readers verify
-    * the checksum after inflate). Executor-side half of the
-    * distributed export. */
+    * — HDF5 stores full edge chunks); see [[deflateChunk]]. */
   private[sources] def compressChunk(values: Array[Double], cells: Int,
       deflateLevel: Int, shuffle: Boolean,
       fletcher32: Boolean = false): Array[Byte] = {
     val buf = ByteBuffer.allocate(cells * 8).order(ByteOrder.LITTLE_ENDIAN)
-    var i = 0
-    while (i < cells) {
-      buf.putDouble(if (i < values.length) values(i) else 0.0)
-      i += 1
-    }
+    buf.asDoubleBuffer().put(values, 0, math.min(values.length, cells))
+    deflateChunk(buf.array(), deflateLevel, shuffle, fletcher32)
+  }
+
+  /** Run one chunk's little-endian bytes through the write pipeline
+    * [shuffle,] [fletcher32,] deflate — the netcdf-c filter order, so
+    * external readers verify the checksum after inflate. Executor-side
+    * half of the distributed export. */
+  private[sources] def deflateChunk(raw: Array[Byte], deflateLevel: Int,
+      shuffle: Boolean, fletcher32: Boolean): Array[Byte] = {
     // shuffle filter: transpose the 8 byte planes so deflate sees runs
     // of high-order bytes (the reader runs the pipeline in reverse)
     val shuffled =
-      if (!shuffle) buf.array()
+      if (!shuffle) raw
       else {
-        val raw = buf.array()
         val n = raw.length / 8
         val sh = new Array[Byte](raw.length)
         var b = 0
@@ -302,22 +304,38 @@ object NetCDF4 {
       denseGroups, compactCoordCells)
   }
 
+  /** One chunk's sidecar blob: every variable's compressed bytes back
+    * to back, written by task attempt `attempt`. */
+  private final case class ChunkBlob(chunk: Int, attempt: Int, sizes: Array[Int]) {
+    def fileName: String = f"chunk-$chunk%08d-a$attempt"
+  }
+
   /**
    * DISTRIBUTED table export — the scale path for `oph_exportnc` to
    * NetCDF-4: every column of `df` (all DoubleType) becomes a deflated
    * chunked variable over one `row` dimension.
    *
-   * Unlike the classic writer (preallocated slabs, executors seek +
-   * write disjoint ranges), compressed chunk sizes are unknown until
-   * compression — so the work splits:
-   *  - EXECUTORS do all the heavy lifting: rows regroup into
-   *    chunk-aligned blocks (one shuffle keyed on rowId/chunkRows),
-   *    each task deflates its chunks for every column and spills the
-   *    compressed blobs to a sidecar file per chunk;
+   * Compressed chunk sizes are unknown until compression, so the HDF5
+   * layout is planned last. The input plan runs ONCE and no row is
+   * shuffled:
+   *  - SEGMENT pass: one job over the plan; each partition spills its
+   *    rows column-major to a segment file in the `out.chunks` sidecar
+   *    directory and returns only its row count ([[ColumnSegments]]);
+   *  - the driver turns those counts into global row offsets;
+   *  - CHUNK pass: one job, one task per chunk; each task reads only
+   *    the byte ranges of the segments that overlap its rows, checks
+   *    it saw exactly its row count, deflates every column (padded to
+   *    the chunk grid's cell count) and writes one sidecar blob;
    *  - the DRIVER collects only the chunk SIZE table (nChunks x nVars
    *    ints), plans the HDF5 layout, and streams metadata + sidecar
    *    bytes sequentially into the final file — O(compressed bytes)
    *    IO, O(size table) memory, no decompression.
+   *
+   * The driver and every executor must share the filesystem that holds
+   * `out` (always true in local mode; the reference exports to a
+   * server-side directory too). The sidecar directory is removed
+   * whether the export succeeds or fails, and a failed assembly removes
+   * its partial `out`.
    *
    * Returns the exported row count.
    */
@@ -331,111 +349,54 @@ object NetCDF4 {
       denseGroups: Boolean = false): Long = {
     val names = df.columns.toSeq
     val nV = names.size
-    require(nV > 0, "netcdf4 export: no columns")
-    require(df.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.DoubleType),
-      "netcdf4 export: all columns must be double")
-    val level = deflateLevel; val shuf = shuffle; val cr = chunkRows
-    val fl32 = fletcher32
-    // ONE sizing pass (per-partition counts -> global offsets), like
-    // the classic slab exporter — zipWithIndex + count() would cost a
-    // third full evaluation of the input plan. A nondeterministic
-    // unpersisted plan is still the caller's hazard; the per-chunk
-    // row-count check below fails loudly if rows move.
-    val rdd = df.rdd
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-      Iterator(i -> n)
-    }.collect().sortBy(_._1).map(_._2)
-    val total = counts.sum
-    if (total == 0L) {
-      emit(out, Seq(NetCDF3.Dim("row", 0)), Map.empty,
-        names.map(n => VarMeta(n, Seq(0), chunkGrid(Seq(0L), cr),
-          Seq.empty)),
-        gatts, level, shuf, (_, _, _) => (), denseGroups = denseGroups)
-      return 0L
-    }
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val nChunks = ((total + cr - 1) / cr).toInt
-    val sideDir = new java.io.File(out + ".chunks")
-    sideDir.mkdirs()
-    val sc = df.sparkSession.sparkContext
-    val sidePath = sideDir.getPath
-    // one shuffle: rows -> their chunk; each chunk task deflates all
-    // columns and writes ONE sidecar blob file
-    val sizes: Array[Array[Int]] = rdd
-      .mapPartitionsWithIndex { case (pi, it) =>
-        var id = offsets(pi)
-        it.map { r =>
-          val a = new Array[Double](nV)
-          var j = 0
-          while (j < nV) {
-            a(j) = if (r.isNullAt(j)) Double.NaN else r.getDouble(j)
-            j += 1
-          }
-          val out = (id / cr, (id % cr, a))
-          id += 1
-          out
-        }
-      }
-      .groupByKey(new org.apache.spark.HashPartitioner(
-        math.max(1, math.min(nChunks, sc.defaultParallelism * 2))))
-      .map { case (cid, rows) =>
-        val rowsIn =
-          if (cid == nChunks - 1) (total - cid * cr).toInt else cr
-        val cols = Array.fill(nV)(new Array[Double](rowsIn))
-        var seen = 0
-        rows.foreach { case (off, a) =>
-          var j = 0
-          while (j < nV) { cols(j)(off.toInt) = a(j); j += 1 }
-          seen += 1
-        }
-        if (seen != rowsIn) throw new IllegalStateException(
-          s"netcdf4 export: chunk $cid saw $seen of $rowsIn rows — " +
-            "nondeterministic plan; persist before exporting")
-        val blobs = cols.map(c => compressChunk(c, cr, level, shuf, fl32))
-        val f = new java.io.File(sidePath, f"chunk-$cid%08d")
-        val os = new java.io.BufferedOutputStream(
-          new java.io.FileOutputStream(f))
-        try blobs.foreach(os.write) finally os.close()
-        (cid, blobs.map(_.length))
-      }.collect().sortBy(_._1).map(_._2)
-    require(sizes.length == nChunks,
-      s"netcdf4 export: ${sizes.length} chunks for $nChunks planned")
-    try {
-      val grid = chunkGrid(Seq(total), cr)
-      val metas = names.zipWithIndex.map { case (n, j) =>
-        VarMeta(n, Seq(0), grid, sizes.map(_(j)).toSeq)
-      }
-      // var-major assembly: skip to this var's blob inside the chunk's
-      // sidecar, copy exactly its bytes
+    ColumnSegments.withSegments(df, out) { segs =>
+      val total = segs.total
       if (total > Int.MaxValue)
         throw new Hdf5.FormatError(
           s"netcdf4 export: $total rows exceed the Int dim model — " +
             "split the cube first")
-      emit(out, Seq(NetCDF3.Dim("row", total.toInt)), Map.empty, metas, gatts,
-        level, shuf, fletcher32 = fl32, denseGroups = denseGroups,
+      val grid = chunkGrid(Seq(total), chunkRows)
+      val nChunks = grid.nChunks
+      val blobs: Array[ChunkBlob] =
+        if (nChunks == 0) Array.empty
+        else df.sparkSession.sparkContext
+          .parallelize(0 until nChunks, nChunks).map { cid =>
+            val from = cid.toLong * grid.chunkRows
+            val rowsIn = math.min(grid.chunkRows.toLong, total - from).toInt
+            // zero-filled past rowsIn: the edge chunk's padding
+            val raw = Array.fill(nV)(new Array[Byte](grid.cellsPerChunk * 8))
+            val seen = segs.readRows(from, rowsIn, raw)
+            if (seen != rowsIn) throw new IllegalStateException(
+              s"netcdf4 export: chunk $cid saw $seen of $rowsIn rows")
+            val bs = raw.map(deflateChunk(_, deflateLevel, shuffle, fletcher32))
+            val blob = ChunkBlob(cid, TaskContext.get().attemptNumber(),
+              bs.map(_.length))
+            val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(
+              new java.io.File(segs.dir, blob.fileName)))
+            try bs.foreach(os.write) finally os.close()
+            blob
+          }.collect()
+      val metas = names.zipWithIndex.map { case (n, j) =>
+        VarMeta(n, Seq(0), grid, blobs.map(_.sizes(j)).toSeq)
+      }
+      // var-major assembly: seek to this var's blob inside the chunk's
+      // sidecar, copy exactly its bytes
+      emit(out, Seq(NetCDF3.Dim("row", total.toInt)), Map.empty, metas,
+        gatts, deflateLevel, shuffle, fletcher32 = fletcher32,
+        denseGroups = denseGroups,
         payload = (vi, ci, os) => {
-          val f = new java.io.File(sidePath, f"chunk-$ci%08d")
-          val in = new java.io.FileInputStream(f)
+          val blob = blobs(ci)
+          val f = new java.io.RandomAccessFile(
+            new java.io.File(segs.dir, blob.fileName), "r")
           try {
-            var toSkip = sizes(ci).take(vi).map(_.toLong).sum
-            while (toSkip > 0) toSkip -= in.skip(toSkip)
-            val buf = new Array[Byte](64 * 1024)
-            var left = sizes(ci)(vi)
-            while (left > 0) {
-              val n = in.read(buf, 0, math.min(left, buf.length))
-              if (n < 0) throw new Hdf5.FormatError(
-                s"netcdf4 export: sidecar chunk $ci truncated")
-              os.write(buf, 0, n); left -= n
-            }
-          } finally in.close()
+            f.seek(blob.sizes.take(vi).map(_.toLong).sum)
+            val buf = new Array[Byte](blob.sizes(vi))
+            f.readFully(buf)
+            os.write(buf)
+          } finally f.close()
         })
-    } finally {
-      sideDir.listFiles().foreach(_.delete())
-      sideDir.delete()
+      total
     }
-    total
   }
 
   /**

@@ -1696,6 +1696,9 @@ final class Engine(
         // routinely named plain `.nc`
         val isNc = op != "oph_importcsv" &&
           paths.forall(graft.sources.NcView.isNetcdf)
+        // one header parse per source path, shared by the dim/var
+        // selection, the CF time units and the global-attribute import
+        val views = if (isNc) paths.map(graft.sources.NcView.open) else Seq.empty
         val raw = if (op == "oph_importcsv")
           spark.read.option("header", "true").option("inferSchema", "true")
             .csv(paths: _*)
@@ -1707,8 +1710,7 @@ final class Engine(
           // carries the requested dims as VARIABLES, not dims — select
           // those alongside the measure so re-importing an exported
           // cube restores its original axes (the importncs roundtrip).
-          val dfs = paths.map { p =>
-            val view = graft.sources.NcView.open(p)
+          val dfs = paths.zip(views).map { case (p, view) =>
             val fileDims = view.dims.map(_.name).toSet
             val dimVars = (exp ++ imp).filter(d =>
               !fileDims.contains(d) && view.vars.exists(_.name == d))
@@ -1731,7 +1733,7 @@ final class Engine(
             val calendar = args.getOrElse("calendar", "standard").toLowerCase
             val standard = Seq("standard", "gregorian", "proleptic_gregorian")
               .contains(calendar)
-            val view = graft.sources.NcView.open(paths.head)
+            val view = views.head
             (exp ++ imp).foldLeft(raw) { (df, d) =>
               view.varAtts.getOrElse(d, Seq.empty)
                 .collectFirst { case ("units", CfUnits(unit, base, _)) =>
@@ -1806,14 +1808,12 @@ final class Engine(
         val pid = register(c, args.getOrElse("container", "container"),
           args.getOrElse("cwd", "/"), sourceTask = Some(op))
         // import the source's global attributes as cube metadata
-        // (reference import_metadata, default yes) — the header-only
-        // read costs KBs
+        // (reference import_metadata, default yes) from the headers
+        // opened above
         if (isNc && !args.get("import_metadata").contains("no"))
-          paths.foreach { p =>
-            graft.sources.NcView.open(p).gatts.foreach { case (k, v) =>
-              catalog.setMetadata(idOf(pid), k, v)
-            }
-          }
+          views.foreach(_.gatts.foreach { case (k, v) =>
+            catalog.setMetadata(idOf(pid), k, v)
+          })
         TaskResult(JobStatus.Completed, cubePid = Some(pid))
 
       case "oph_concatnc" | "oph_concatnc2" =>
@@ -2115,7 +2115,7 @@ final class Engine(
         // column to double UNDER ITS OWN NAME (dates as epoch days,
         // timestamps as epoch seconds, nulls as NaN downstream);
         // non-encodable (string) columns are reported as dropped
-        def encodePlan(): (org.apache.spark.sql.DataFrame, Seq[String], Seq[String]) = {
+        def encodePlan(): (org.apache.spark.sql.DataFrame, Seq[String]) = {
           import org.apache.spark.sql.types._
           val flat = c.flatten
           val encodable = flat.schema.fields.collect {
@@ -2131,13 +2131,14 @@ final class Engine(
             .filterNot(encodable.map(_._1).contains)
           if (encodable.isEmpty)
             throw new Engine.EngineError("exportnc: no encodable columns")
-          (flat.select(encodable.map(_._2): _*), encodable.map(_._1), dropped)
+          (flat.select(encodable.map(_._2): _*), dropped)
         }
         if (out.endsWith(".nc4")) {
-          // NetCDF-4/HDF5 output: distributed chunk deflate on the
-          // executors, metadata + sidecar streaming on the driver
+          // NetCDF-4/HDF5 output: the plan runs once into column
+          // segments, executors deflate one chunk per task, and the
+          // driver streams metadata + the chunk sidecars into the file
           // (see NetCDF4.writeTableDistributed for the scale shape)
-          val (dfEnc, _, dropped) = encodePlan()
+          val (dfEnc, dropped) = encodePlan()
           // fletcher32=yes adds per-chunk checksums (the netcdf-c
           // nc_def_var_fletcher32 surface); shuffle=yes the byte
           // transpose that improves deflate on slowly-varying doubles
@@ -2153,69 +2154,13 @@ final class Engine(
         } else if (out.endsWith(".nc")) {
           // real NetCDF-3 classic output: table-style encoding — a
           // 'row' dimension with the measure and every encodable dim as
-          // variables. DISTRIBUTED write, no row cap: one sizing pass
-          // per partition, then executors fill disjoint offset-addressed
-          // slabs of the single classic file in parallel (classic is
-          // single-file by spec, so this assumes a shared filesystem —
-          // same as the reference's server-side export directory).
-          val (dfEnc, names, dropped) = encodePlan()
-          // pass 1: per-partition row counts -> each partition's start row
-          val counts = dfEnc.rdd
-            .mapPartitionsWithIndex { case (i, it) =>
-              var n = 0L; while (it.hasNext) { it.next(); n += 1 }
-              Iterator(i -> n)
-            }.collect().sortBy(_._1).map(_._2)
-          val total = counts.sum
-          if (total > Int.MaxValue - 8)
-            throw new Engine.EngineError(
-              s"exportnc: $total rows exceed the classic 'row' dimension; split the cube first")
-          if (total == 0) {
-            // degenerate: a zero-length FIXED dim would parse as the
-            // record dim, so write the empty table driver-side
-            graft.sources.NetCDF3.write(out,
-              Seq(graft.sources.NetCDF3.Dim("row", 0)),
-              names.map(n => (n, Seq(0), Array.empty[Double])),
-              gatts = exportGatts)
-            return TaskResult(JobStatus.Completed,
-              message = s"exported 0 rows to $out")
-          }
-          val dims = Seq(graft.sources.NetCDF3.Dim("row", total.toInt))
-          val begins = graft.sources.NetCDF3.writeTableHeader(out, dims,
-            names.map(n => (n, Seq(0))),
-            gatts = exportGatts)
-          val starts = counts.scanLeft(0L)(_ + _)
-          val nVars = names.size
-          // pass 2: each partition buffers its column slabs and issues
-          // one positioned write per variable — writers never overlap.
-          // The sizing pass re-evaluates the plan, so a nondeterministic
-          // plan could shift rows between partitions: verify each
-          // partition still matches its pass-1 count and fail LOUDLY
-          // rather than write overlapping/corrupt slabs
-          dfEnc.rdd.mapPartitionsWithIndex { case (pi, it) =>
-            val bufs = Array.fill(nVars)(
-              new scala.collection.mutable.ArrayBuilder.ofDouble)
-            while (it.hasNext) {
-              val r = it.next()
-              var j = 0
-              while (j < nVars) {
-                bufs(j) += (if (r.isNullAt(j)) Double.NaN else r.getDouble(j))
-                j += 1
-              }
-            }
-            val slabs = bufs.map(_.result())
-            if (slabs.headOption.exists(_.length != counts(pi)))
-              throw new IllegalStateException(
-                s"exportnc: partition $pi produced ${slabs.head.length} rows " +
-                  s"but the sizing pass saw ${counts(pi)} — nondeterministic " +
-                  "plan; persist the cube before exporting")
-            var j = 0
-            while (j < nVars) {
-              graft.sources.NetCDF3.writeSlab(out, begins(j), starts(pi),
-                slabs(j))
-              j += 1
-            }
-            Iterator.single(pi)
-          }.count()
+          // variables. DISTRIBUTED write, no row cap (see
+          // NetCDF3.writeTableDistributed; classic is single-file by
+          // spec, so this assumes a shared filesystem — same as the
+          // reference's server-side export directory).
+          val (dfEnc, dropped) = encodePlan()
+          val total = graft.sources.NetCDF3.writeTableDistributed(
+            dfEnc, out, gatts = exportGatts)
           TaskResult(JobStatus.Completed,
             message = s"exported $total rows to $out" +
               (if (dropped.nonEmpty)

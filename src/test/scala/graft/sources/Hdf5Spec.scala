@@ -287,6 +287,78 @@ class Hdf5Spec extends SparkSpec {
       r.getDouble(0) == i.toDouble && r.getDouble(1) == i * 2.0 + 1 })
   }
 
+  test("single-chunk distributed export stores exactly rows x 8 bytes") {
+    import org.apache.spark.sql.functions._
+    // fewer rows than chunkRows: the grid's one chunk holds `rows`
+    // rows, so the stored chunk must inflate to exactly that (plus the
+    // fletcher32 checksum), not to a chunkRows-sized padded block
+    val rows = 1000
+    val df = spark.range(0, rows, 1, 3)
+      .select(sin(col("id").cast("double")).as("v"))
+    val expected = (0 until rows).map(i => math.sin(i.toDouble))
+    Seq(false, true).foreach { filters =>
+      val out = tmp(s"onechunk_$filters")
+      assert(NetCDF4.writeTableDistributed(df, out, shuffle = filters,
+        fletcher32 = filters) == rows)
+      val v = NetCDF4.open(out).varByName("v")
+      val Seq((_, addr, size)) = Hdf5.chunkIndex(out, v.ds)
+      val stored = new Array[Byte](size)
+      val f = new java.io.RandomAccessFile(out, "r")
+      try { f.seek(addr); f.readFully(stored) } finally f.close()
+      val inf = new java.util.zip.Inflater()
+      inf.setInput(stored)
+      val inflated = new java.io.ByteArrayOutputStream
+      val buf = new Array[Byte](64 * 1024)
+      while (!inf.finished() && !inf.needsInput())
+        inflated.write(buf, 0, inf.inflate(buf))
+      assert(inf.finished(), "chunk did not inflate to its end")
+      inf.end()
+      val inflatedBytes = inflated.size
+      val checksum = if (filters) 4 else 0
+      assert(inflatedBytes == rows * 8 + checksum, s"filters=$filters")
+      assert(NetCDF4.readSlab(out, v, 0, rows).toSeq == expected)
+    }
+  }
+
+  test("a failing distributed export leaves no sidecars and no partial file") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 100, 1, 2).select(
+      when(col("id") === 57, raise_error(lit("boom at row 57")))
+        .otherwise(col("id").cast("double")).as("v"))
+    val out = tmp("failnc4")
+    val err = intercept[Exception](
+      NetCDF4.writeTableDistributed(df, out, chunkRows = 16))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("boom at row 57")),
+      s"error did not propagate: $err")
+    assert(!new java.io.File(out + ".chunks").exists(), "sidecars leaked")
+    assert(!new java.io.File(out).exists(), "partial output left behind")
+  }
+
+  test("distributed nc4 and classic exports evaluate their input plan once") {
+    import org.apache.spark.sql.functions._
+    // the counting UDF sits after the shuffle, in the stage the export
+    // itself runs: a second evaluation of the plan would double it
+    val evals = spark.sparkContext.longAccumulator("nc4-export-evals")
+    val tick = udf((x: Double) => { evals.add(1); x })
+    val df = spark.range(10000).repartition(4)
+      .select(tick(col("id").cast("double")).as("k"),
+        (col("id") * 2 + 1).cast("double").as("v"))
+    val out = tmp("oncenc4")
+    assert(NetCDF4.writeTableDistributed(df, out, chunkRows = 1500) == 10000)
+    assert(evals.value == 10000L, s"${evals.value} row evaluations")
+    val m = NetCDF4.open(out)
+    assert(Hdf5.chunkIndex(out, m.varByName("v").ds).size == 7)
+    val got = spark.read.format("netcdf4").load(out)
+      .select(col("k"), col("v")).orderBy("k").collect()
+    assert(got.length == 10000)
+    assert(got.zipWithIndex.forall { case (r, i) =>
+      r.getDouble(0) == i.toDouble && r.getDouble(1) == i * 2.0 + 1 })
+    val classic = tmp("oncenc3") + ".nc"
+    assert(NetCDF3.writeTableDistributed(df, classic) == 10000)
+    assert(evals.value == 20000L, s"${evals.value - 10000} classic evaluations")
+  }
+
   test("engine exportnc to .nc4 roundtrips through the engine importer") {
     import graft.core.{Catalog, JobStatus}
     import graft.workflow.Engine
