@@ -38,7 +38,6 @@ final case class CubeDescriptor(
     parents: Seq[Long] = Seq.empty,     // provenance: input cube ids
     fragments: Int = 0) {               // recorded partition count
   def pid(base: String = "graft:/"): String = s"$base/$containerId/$id"
-  def allDims: Seq[DimensionSpec] = explicitDims ++ implicitDims
 }
 
 /** Job status enum — 1:1 with the reference's `OPH_ODB_STATUS_*` lifecycle

@@ -3,6 +3,7 @@ package graft.cube
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 import graft.core.{CubeDescriptor, DimensionSpec, SparkTypeName, Subset}
 
@@ -25,15 +26,19 @@ import graft.core.{CubeDescriptor, DimensionSpec, SparkTypeName, Subset}
  *     index-aligned with the measure array (the reference stores these in
  *     the dimension DB; we co-locate them for locality).
  *
- * Scale notes (100 TB): the groupBy in `build` shuffles once on the
- * explicit dims; array length is the implicit-dim cardinality (bounded by
- * design, exactly like the reference's fragment blob). All per-cell ops
+ * Scale notes (100 TB): building a cube from long-form rows (`buildN`:
+ * parquet/CSV imports, multi-file or collapsing NetCDF imports, randcube)
+ * shuffles once on the explicit dims. A grid-shaped NetCDF import (one
+ * file, one implicit dim, every other axis explicit, distinct axis
+ * values, storage unchunked or chunked across an explicit axis) skips
+ * that shuffle: the source's cube-shaped scan emits the rows directly
+ * (`fromSeries`; the full rule is `Engine.seriesAxis`).
+ * Array length is the implicit-dim cardinality (bounded by design,
+ * exactly like the reference's fragment blob). All per-cell ops
  * (reduce/apply/permute) are narrow — no shuffle, no driver traffic.
  */
 final case class Cube(df: DataFrame, desc: CubeDescriptor) {
-  def measureCol: Column = df(desc.measure)
   def hasImplicit: Boolean = desc.implicitDims.nonEmpty
-  def dimCol(name: String): Column = df(s"__dim_$name")
   def explicitDimNames: Seq[String] = desc.explicitDims.map(_.name)
 
   /** Relational (long-form) view: implicit dims exploded back to rows.
@@ -103,12 +108,16 @@ object CubeOps {
       source: String): Cube =
     buildN(raw, measure, explicitDims, implicitDim.toSeq, container, source)
 
-  /** Build with ANY number of implicit dims. Rank >= 2 serializes the
-    * cell in row-major order of the dim tuple (array_sort on the
-    * lexicographic struct), keeps one axis-aligned `__dim_<name>`
-    * coordinate array per implicit dim, and records per-axis sizes as
-    * shape metadata (one small distinct-count job at import — the
-    * reference's importnc is an eager fragment materialization too,
+  /** Build with ANY number of implicit dims from long-form rows (one
+    * per cell). The explicit dims are the groupBy key, so this costs
+    * one shuffle; `importnc` of a grid-shaped NetCDF file avoids it
+    * through [[fromSeries]]. Rank 1 orders each cell's array by dim
+    * value. Rank >= 2 serializes the cell in row-major order of the
+    * dim tuple (array_sort on the lexicographic struct), keeps one
+    * axis-aligned `__dim_<name>` coordinate array per implicit dim,
+    * and records per-axis sizes as shape metadata (one small
+    * distinct-count job at import — the reference's importnc is an
+    * eager fragment materialization too,
     * `src/oph_json/oph_json_objkeys.h:114`). The grid must be dense:
     * a ragged group fails loudly at action time via raise_error. */
   def buildN(
@@ -154,18 +163,44 @@ object CubeOps {
         }
         withDims.drop("__kv")
     }
-    val mType = raw.schema(measure).dataType
-    val eDims = explicitDims.map(d =>
-      DimensionSpec(d, SparkTypeName(raw.schema(d).dataType), explicit = true))
     val iDims = implicitDims.map(d =>
       DimensionSpec(d, SparkTypeName(raw.schema(d).dataType),
         explicit = false, size = sizes.get(d)))
+    imported(df, raw.schema, measure, raw.schema(measure).dataType,
+      explicitDims, iDims, container, source)
+  }
+
+  /** A cube whose rows a source already built in `buildN`'s single
+    * implicit-dim shape: one row per explicit cell, the cell's series
+    * as the `measure` array and its dim values, ascending and
+    * index-aligned, as `__dim_<implicitDim>` — the NetCDF source's
+    * cube-shaped scan. No shuffle. */
+  def fromSeries(
+      df: DataFrame,
+      measure: String,
+      explicitDims: Seq[String],
+      implicitDim: String,
+      container: String,
+      source: String): Cube = {
+    def elementType(c: String) =
+      df.schema(c).dataType.asInstanceOf[ArrayType].elementType
+    imported(df, df.schema, measure, elementType(measure), explicitDims,
+      Seq(DimensionSpec(implicitDim,
+        SparkTypeName(elementType(s"__dim_$implicitDim")), explicit = false)),
+      container, source)
+  }
+
+  private def imported(df: DataFrame, schema: StructType, measure: String,
+      measureType: DataType, explicitDims: Seq[String],
+      implicitDims: Seq[DimensionSpec], container: String,
+      source: String): Cube =
     Cube(df, CubeDescriptor(
       id = 0, containerId = 0, container = container, path = "/",
-      measure = measure, measureType = SparkTypeName(mType), level = 0,
-      explicitDims = eDims, implicitDims = iDims,
+      measure = measure, measureType = SparkTypeName(measureType), level = 0,
+      explicitDims = explicitDims.map(d => DimensionSpec(d,
+        SparkTypeName(schema(d).dataType), explicit = true)),
+      implicitDims = implicitDims,
       metadata = Map("source" -> source)))
-  }
 
   // -------------------------------------------------------------------
   // oph_subset / oph_subset2 (`src/oph_subset_library.c:64-190`,
@@ -216,13 +251,6 @@ object CubeOps {
     * 1-based predicate; stays inside the executors. */
   private def filter_positions(arr: Column, p: Column => Column): Column =
     filter(arr, (_: Column, i0: Column) => p(i0 + lit(1)))
-
-  /** Index subset along ONE named implicit dim of a multi-implicit-dim
-    * cube (row-major stride arithmetic, in-cell, executor-local).
-    * Kept as the 2-dim name for API stability; delegates to the n-D
-    * path, which handles any rank. */
-  def subsetImplicit2(cube: Cube, dim: String, filterStr: String): Cube =
-    subsetImplicitN(cube, dim, filterStr)
 
   // -------------------------------------------------------------------
   // n-implicit-dim cubes: flattened row-major arrays with shape
@@ -758,20 +786,6 @@ object CubeOps {
   // 2-implicit-dim cubes: flattened row-major arrays with shape
   // metadata — the reference's n-dimensional in-blob layout
   // -------------------------------------------------------------------
-
-  /** oph_reduce2 over a 2-implicit-dim flattened array (shape n1 x n2,
-    * row-major): reduce along the INNER dim (contiguous n2-blocks) or
-    * the OUTER dim (stride-n2 gather). Both are in-cell index
-    * arithmetic — executor-local, no shuffle, no explode. */
-  def reduceAlong2(arr: Column, n1: Int, n2: Int, alongInner: Boolean,
-      op: String): Column =
-    if (alongInner)
-      transform(sequence(lit(0), lit(n1 - 1)),
-        i => reduceExpr(slice(arr, i * n2 + 1, lit(n2)), op))
-    else
-      transform(sequence(lit(0), lit(n2 - 1)), j =>
-        reduceExpr(transform(sequence(lit(0), lit(n1 - 1)),
-          i => element_at(arr, (i * n2 + j + 1).cast("int"))), op))
 
   /** oph_reduce2 at the cube level: reduce along a NAMED implicit dim;
     * the surviving dims keep their specs. Delegates to the n-D path. */

@@ -434,8 +434,17 @@ object Dedup {
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxRounds: Int = 25): DataFrame = {
     import org.apache.spark.sql.graftbridge.InternalRowBridge
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+      ShortType, StructField, StructType}
     val spark = vertices.sparkSession
+    // ids must be integral: the long cast below turns a string key
+    // into null, which would silently drop its edges
+    Seq(vertices.schema("id"), edges.schema("src"), edges.schema("dst"))
+      .foreach { f =>
+        require(Seq(ByteType, ShortType, IntegerType, LongType)
+          .contains(f.dataType), s"connectedComponents: '${f.name}' " +
+          s"must be an integral type, got ${f.dataType.simpleString}")
+      }
     val debug = sys.env.contains("GRAFT_CC_DEBUG")
     val pairSchema = StructType(Seq(
       StructField("a", LongType, nullable = false),

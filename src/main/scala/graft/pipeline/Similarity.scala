@@ -213,7 +213,8 @@ object Similarity {
     // (~9 fewer Exchanges on duplicate-free corpora); results are
     // bit-identical either way, the counts only pick the plan.
     val Array(nDistinct, nTotal) = clustered
-      .agg(count(lit(1)), sum(size(col("ids"))).cast("long"))
+      .agg(count(lit(1)),
+        coalesce(sum(size(col("ids"))).cast("long"), lit(0L)))
       .head().toSeq.toArray.map(_.asInstanceOf[Long])
     // the persisted frame is ONLY (id, band, bandhash) — 3 narrow
     // columns. The signature pass runs once to produce it; the

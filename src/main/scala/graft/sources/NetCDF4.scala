@@ -45,8 +45,6 @@ object NetCDF4 {
 
   private val NotAVariable = "This is a netCDF dimension but not a netCDF variable"
 
-  def isNc4(path: String): Boolean = Hdf5.isHdf5(path)
-
   def open(path: String): Model = {
     val f = Hdf5.open(path)
     val scales = f.datasets.filter(

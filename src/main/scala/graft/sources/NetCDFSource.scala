@@ -172,6 +172,25 @@ object NcView {
  *    reader: unprojected variables are never read, unprojected
  *    dimension columns are never computed.
  *
+ * Cube-shaped mode (read option [[NetCDFSource.CubeImplicit]] naming
+ * one axis of a single measure variable; set by the engine's
+ * `oph_importnc`, not a workflow argument): the scan emits the
+ * datacube rows themselves — one row per cell of the OTHER (explicit)
+ * axes, each explicit axis a `double` column, the measure as
+ * `array<double>` holding that cell's whole series along the implicit
+ * axis in index order, and `__dim_<axis>` as the axis' coordinate
+ * array. Partitions are boxes that span the whole implicit axis and
+ * tile the explicit ones at the storage-chunk grain (one index when
+ * the variable is unchunked or classic), split greedily outermost
+ * first up to the default parallelism, no tile over
+ * [[NetCDFSource.MaxTileCells]] (a variable whose single-chunk tile is
+ * larger is refused at planning); each reader does one box read per
+ * projected variable and gathers every series by stride, so the cube
+ * needs no groupBy and no shuffle. Comparison hints on the explicit
+ * axes prune tiles exactly as in box planning.
+ * [[NetCDFSource.seriesFits]] tells which storage layouts this mode
+ * reads well.
+ *
  * This is the real-format replacement for the reference's
  * `oph_importnc` source (`src/oph_json/oph_json_objkeys.h:114`).
  */
@@ -186,12 +205,14 @@ class NetCDFSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     NetCDFSource.schemaOf(NcView.open(pathOf(options)),
-      Option(options.get("measure")))
+      Option(options.get("measure")),
+      Option(options.get(NetCDFSource.CubeImplicit)))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new NcTable(pathOf(opts), schema, Option(opts.get("measure")))
+    new NcTable(pathOf(opts), schema, Option(opts.get("measure")),
+      Option(opts.get(NetCDFSource.CubeImplicit)))
   }
 
   override def supportsExternalMetadata(): Boolean = true
@@ -204,6 +225,92 @@ class NetCDF4Source extends NetCDFSource {
 }
 
 object NetCDFSource {
+  /** Read option selecting the cube-shaped mode: the name of the axis
+    * each row carries as an array (see the class doc). */
+  val CubeImplicit = "cube_implicit"
+
+  /** Cells one planned tile may hold, so box buffers stay
+    * executor-sized (and far below a primitive array's limit). */
+  val MaxTileCells: Long = 1L << 24
+
+  /** Plan the box `ranges` (per-axis [lo, hi)) as a cartesian grid of
+    * tiles whose inner boundaries fall on multiples of `grain(i)`.
+    * Split counts are chosen GREEDILY from the outermost axis inward
+    * until the tile count reaches `parallelism` and the cell target —
+    * a file with few outer chunks but many inner ones (a short-time
+    * high-resolution archive) still parallelizes across its inner
+    * chunk grid. Tiles are then shrunk, outermost axis first and never
+    * below one grain, until each holds at most `maxCells` cells; so
+    * the bound holds whenever one grain's box does. An axis whose
+    * grain covers it is never split. */
+  private[sources] def tileGrid(ranges: Seq[(Long, Long)], grain: Seq[Long],
+      parallelism: Long,
+      maxCells: Long = MaxTileCells): Array[InputPartition] = {
+    val rank = ranges.size
+    val span = ranges.map(r => r._2 - r._1)
+    val firstChunk = ranges.indices.map(i => ranges(i)._1 / grain(i))
+    val nAlong = ranges.indices.map(i =>
+      (ranges(i)._2 - 1) / grain(i) - firstChunk(i) + 1)
+    var remaining = math.max(parallelism, (span.product + maxCells - 1) / maxCells)
+    // grains per tile along each axis
+    val per = Array.tabulate(rank) { i =>
+      val s = if (remaining <= 1) 1L else math.min(nAlong(i), remaining)
+      remaining = (remaining + s - 1) / s
+      (nAlong(i) + s - 1) / s
+    }
+    // uneven splits (and axes the greedy pass left whole) can leave a
+    // tile over the bound
+    def edge(i: Int): Long = math.min(per(i) * grain(i), span(i))
+    for (i <- 0 until rank) {
+      val others = (0 until rank).filter(_ != i).map(edge).product
+      if (others * edge(i) > maxCells)
+        per(i) = math.max(1L, math.min(per(i), maxCells / (others * grain(i))))
+    }
+    val axisTiles: Seq[Seq[(Long, Long)]] = ranges.indices.map { i =>
+      val c = grain(i)
+      (0L until (nAlong(i) + per(i) - 1) / per(i)).map { t =>
+        (math.max(ranges(i)._1, (firstChunk(i) + t * per(i)) * c),
+          math.min(ranges(i)._2, (firstChunk(i) + (t + 1) * per(i)) * c))
+      }
+    }
+    axisTiles
+      .foldLeft(Seq(Seq.empty[(Long, Long)])) { (acc, ts) =>
+        acc.flatMap(p => ts.map(p :+ _))
+      }
+      .map(combo => NcBoxPartition(
+        combo.map(_._1),
+        combo.map(t => (t._2 - t._1).toInt)): InputPartition)
+      .toArray
+  }
+
+  /** Tile grain of the cube-shaped mode over a variable of axis
+    * lengths `lens`, implicit axis `k`: the whole implicit axis (it is
+    * never cut), and on the explicit axes the storage chunk — so no
+    * two tiles decode the same chunk — or one index when the variable
+    * is unchunked or classic. */
+  private[sources] def seriesGrain(lens: Seq[Long], chunk: Option[Seq[Int]],
+      k: Int): Seq[Long] =
+    lens.indices.map(i =>
+      if (i == k) lens(i) else chunk.fold(1L)(c => math.min(c(i).toLong, lens(i))))
+
+  /** Whether the cube-shaped read suits the storage of `measure`
+    * along implicit axis `imp`: one grain's tile (see [[seriesGrain]])
+    * fits `maxCells`, and the tiles split the variable — it is
+    * unchunked or classic, has no explicit axis, or its chunks cut at
+    * least one explicit axis. A variable chunked along the implicit
+    * axis only, e.g. (1, lat, lon) per time step, would read as ONE
+    * tile in one task; it imports faster through the long-form scan. */
+  def seriesFits(v: NcView, measure: String, imp: String,
+      maxCells: Long = MaxTileCells): Boolean = {
+    val axes = v.varByName(measure).dimIds.map(v.dims(_))
+    val k = axes.indexWhere(_.name == imp)
+    val lens = axes.map(_.length.toLong)
+    val chunk = v.chunkDimsOf(measure).filter(_.size == axes.size)
+    k >= 0 && seriesGrain(lens, chunk, k).product <= maxCells &&
+      (axes.size == 1 || chunk.forall(c =>
+        axes.indices.exists(i => i != k && c(i) < lens(i))))
+  }
+
   /** Grid variables = the non-coordinate vars of maximal rank (or the
     * explicit `measure` list); their shared dims are the axes. */
   def gridVars(v: NcView, measure: Option[String]): Seq[NcVarView] = {
@@ -232,28 +339,63 @@ object NetCDFSource {
     }
   }
 
-  def schemaOf(v: NcView, measure: Option[String]): StructType = {
+  def schemaOf(v: NcView, measure: Option[String],
+      implicitAxis: Option[String] = None): StructType = {
     val vs = gridVars(v, measure)
     require(vs.nonEmpty, "netcdf: no data variables")
     val axes = vs.head.dimIds.map(v.dims(_))
-    StructType(
-      axes.map(d => StructField(d.name, DoubleType, nullable = false)) ++
-        vs.map(x => StructField(x.name, DoubleType, nullable = false)))
+    implicitAxis match {
+      case None =>
+        StructType(
+          axes.map(d => StructField(d.name, DoubleType, nullable = false)) ++
+            vs.map(x => StructField(x.name, DoubleType, nullable = false)))
+      case Some(imp) =>
+        implicitIndex(axes, vs, imp)
+        val series = ArrayType(DoubleType, containsNull = false)
+        StructType(
+          axes.filterNot(_.name == imp)
+            .map(d => StructField(d.name, DoubleType, nullable = false)) ++
+            Seq(StructField(vs.head.name, series, nullable = false),
+              StructField(s"__dim_$imp", series, nullable = false)))
+    }
   }
+
+  /** Position of the implicit axis among the grid's axes; the
+    * cube-shaped mode needs exactly one measure variable. */
+  private[sources] def implicitIndex(axes: Seq[NetCDF3.Dim],
+      vs: Seq[NcVarView], imp: String): Int = {
+    require(vs.size == 1,
+      s"netcdf: the cube-shaped read takes one measure variable, got " +
+        vs.map(_.name).mkString("|"))
+    val k = axes.indexWhere(_.name == imp)
+    require(k >= 0 && axes.count(_.name == imp) == 1,
+      s"netcdf: '$imp' is not an axis of '${vs.head.name}'")
+    k
+  }
+
+  /** Row-major strides of a box with edge lengths `lens`. */
+  private[sources] def rowMajorStrides(lens: Seq[Int]): Array[Long] =
+    lens.scanRight(1L)(_ * _).tail.toArray
+
+  /** Whether `name` is a 1-D coordinate variable over its own dim. */
+  def isCoordVar(v: NcView, name: String): Boolean =
+    v.vars.exists(x => x.name == name &&
+      x.dimIds == Seq(v.dims.indexWhere(_.name == name)))
 }
 
 final class NcTable(path: String, schema: StructType,
-    measure: Option[String]) extends Table with SupportsRead {
+    measure: Option[String], implicitAxis: Option[String])
+    extends Table with SupportsRead {
   override def name(): String = s"netcdf:$path"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NcScanBuilder(path, schema, measure)
+    new NcScanBuilder(path, schema, measure, implicitAxis)
 }
 
 final class NcScanBuilder(path: String, fullSchema: StructType,
-    measure: Option[String])
+    measure: Option[String], implicitAxis: Option[String] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = fullSchema
@@ -275,15 +417,17 @@ final class NcScanBuilder(path: String, fullSchema: StructType,
   }
   override def pushedFilters(): Array[sources.Filter] = hints
   override def build(): Scan =
-    new NcScan(path, fullSchema, required, measure, hints)
+    new NcScan(path, fullSchema, required, measure, hints, implicitAxis)
 }
 
 final class NcScan(path: String, fullSchema: StructType,
     required: StructType, measure: Option[String],
-    hints: Array[sources.Filter] = Array.empty) extends Scan with Batch {
+    hints: Array[sources.Filter] = Array.empty,
+    implicitAxis: Option[String] = None) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def description(): String =
     s"netcdf $path [${required.fieldNames.mkString(",")}]" +
+      implicitAxis.map(a => s" series along $a").getOrElse("") +
       (if (hints.nonEmpty) s" hints: ${hints.mkString(",")}" else "")
   override def toBatch: Batch = this
 
@@ -309,10 +453,8 @@ final class NcScan(path: String, fullSchema: StructType,
       case _ => None
     }
     if (relevant.isEmpty || rows > (1 << 24)) return (0L, rows.toLong)
-    val hasCoord = v.vars.exists(x => x.name == axis.name &&
-      x.dimIds == Seq(v.dims.indexWhere(_.name == axis.name)))
     val coords: Array[Double] =
-      if (hasCoord) v.slab(axis.name, 0, rows)
+      if (NetCDFSource.isCoordVar(v, axis.name)) v.slab(axis.name, 0, rows)
       else Array.tabulate(rows)(i => (i + 1).toDouble)
     // pruning must be CONSERVATIVE: an unsorted axis — or any NaN,
     // which breaks the total order binary search relies on — scans
@@ -355,99 +497,82 @@ final class NcScan(path: String, fullSchema: StructType,
     val vs = NetCDFSource.gridVars(v, measure)
     val axes = vs.head.dimIds.map(v.dims(_))
     val total = axes.map(_.length.toLong).product
+    val imp = implicitAxis.map(NetCDFSource.implicitIndex(axes, vs, _))
     // per-axis pruning: the conjunctive comparison hints cut every
     // axis to a surviving index range, so the scan plans only the
     // predicate hyper-rectangle — the reference pushes subsets into
     // storage on ANY dimension (oph_subset_library.h:35 via
-    // oph_filters.c:223); the chunk grid is this source's equivalent
-    val ranges = axes.map(a => axisRange(v, a, a.length))
+    // oph_filters.c:223); the chunk grid is this source's equivalent.
+    // A cube-shaped scan's implicit axis is not a column and is never
+    // cut: every row carries its whole series.
+    val ranges = axes.indices.map(i =>
+      if (imp.contains(i)) (0L, axes(i).length.toLong)
+      else axisRange(v, axes(i), axes(i).length))
     if (ranges.exists(r => r._2 <= r._1) || total == 0) return Array.empty
-    val innerConstrained = axes.zip(ranges).drop(1).exists {
-      case (a, (lo, hi)) => lo > 0 || hi < a.length
-    }
     val chunkDimsOpt = v.chunkDimsOf(vs.head.name)
       .filter(_.size == axes.size)
-    // storage tiled on an INNER axis: a flat cell range's chunk
-    // overlap test degenerates (an inner-axis chunk's flat bounding
-    // range spans nearly the whole variable), so flat partitions
-    // would each decode nearly every chunk — box partitions decode
-    // each chunk exactly once whether or not a filter constrains it
-    val ndChunked = chunkDimsOpt.exists(cd =>
-      cd.zipWithIndex.drop(1).exists { case (c, i) => c < axes(i).length })
-    if (!innerConstrained && !ndChunked) {
-      // only the first axis (or nothing) is constrained: flat
-      // contiguous cell ranges, chunk-grain aligned — one slab read
-      // per variable per partition
-      val rowCells = axes.drop(1).map(_.length.toLong).product max 1L
-      val (loRow, hiRow) =
-        if (axes.isEmpty) (0L, 1L) else ranges.head
-      val (first, last) = (loRow * rowCells, (hiRow * rowCells) min total)
-      val span = (last - first) max 0L
-      if (span == 0) return Array.empty
-      val slices = math.max(1, math.min(span,
-        org.apache.spark.sql.SparkSession.active
-          .sparkContext.defaultParallelism.toLong)).toInt
-      val raw = (span + slices - 1) / slices
-      // round the split up to the chunk grain: a boundary inside a
-      // NetCDF-4 chunk would make BOTH partitions read+inflate it
-      val step = ((raw + v.alignCells - 1) / v.alignCells) * v.alignCells
-      // align the range start DOWN to the grain too
-      val start = (first / v.alignCells) * v.alignCells
-      (start until last by step).map(s =>
-        NcPartition(s max first, math.min(s + step, last)): InputPartition)
-        .filter(p => p.asInstanceOf[NcPartition].start <
-          p.asInstanceOf[NcPartition].end)
-        .toArray
-    } else {
-      // an INNER axis is constrained: plan the predicate box as a
-      // cartesian grid of chunk-aligned tiles (no two partitions
-      // decode the same chunk). Split counts are chosen GREEDILY from
-      // the outermost axis inward until the tile count reaches the
-      // parallelism / cell-size target — a file with few outer chunks
-      // but many inner ones (a short-time high-resolution archive)
-      // still parallelizes across its inner chunk grid. Readers fetch
-      // each variable with one box read that touches only the
-      // intersecting chunks — a (lat, lon) subset of a
-      // (time, lat, lon) archive reads a slab, not the world.
-      val chunkDims: Seq[Int] =
-        chunkDimsOpt.getOrElse(1 +: axes.drop(1).map(_.length))
-      val boxCells =
-        axes.indices.map(i => ranges(i)._2 - ranges(i)._1).product
-      val par = org.apache.spark.sql.SparkSession.active
-        .sparkContext.defaultParallelism.toLong
-      // bound per-partition cells so box buffers stay executor-sized
-      val maxCells = 1L << 24
-      val wanted = math.max(par, (boxCells + maxCells - 1) / maxCells)
-      var remaining = wanted
-      val axisTiles: Seq[Seq[(Long, Long)]] = axes.indices.map { i =>
-        val c = chunkDims(i)
-        val firstChunk = ranges(i)._1 / c
-        val lastChunk = (ranges(i)._2 - 1) / c
-        val nAlong = lastChunk - firstChunk + 1
-        val s = if (remaining <= 1) 1L else math.min(nAlong, remaining)
-        remaining = (remaining + s - 1) / s
-        val chunksPerTile = (nAlong + s - 1) / s
-        (0L until s).flatMap { t =>
-          val lo = math.max(ranges(i)._1,
-            (firstChunk + t * chunksPerTile) * c)
-          val hi = math.min(ranges(i)._2,
-            (firstChunk + (t + 1) * chunksPerTile) * c)
-          if (lo >= hi) None else Some((lo, hi))
+    imp match {
+      case Some(k) =>
+        // cube-shaped: tiles span the implicit axis and cut the
+        // explicit ones (see seriesGrain)
+        val grain =
+          NetCDFSource.seriesGrain(axes.map(_.length.toLong), chunkDimsOpt, k)
+        require(grain.product <= NetCDFSource.MaxTileCells,
+          s"netcdf: one tile of the series along '${axes(k).name}' holds " +
+            s"${grain.product} cells, over ${NetCDFSource.MaxTileCells}; " +
+            "read this variable without the cube-shaped mode")
+        NetCDFSource.tileGrid(ranges, grain, parallelism)
+      case None =>
+        val innerConstrained = axes.zip(ranges).drop(1).exists {
+          case (a, (lo, hi)) => lo > 0 || hi < a.length
         }
-      }
-      axisTiles
-        .foldLeft(Seq(Seq.empty[(Long, Long)])) { (acc, ts) =>
-          acc.flatMap(p => ts.map(p :+ _))
+        // storage tiled on an INNER axis: a flat cell range's chunk
+        // overlap test degenerates (an inner-axis chunk's flat bounding
+        // range spans nearly the whole variable), so flat partitions
+        // would each decode nearly every chunk — box partitions decode
+        // each chunk exactly once whether or not a filter constrains it
+        val ndChunked = chunkDimsOpt.exists(cd =>
+          cd.zipWithIndex.drop(1).exists { case (c, i) => c < axes(i).length })
+        if (innerConstrained || ndChunked)
+          // an INNER axis is constrained (or tiled): plan the predicate
+          // box as chunk-aligned tiles. Readers fetch each variable
+          // with one box read that touches only the intersecting
+          // chunks — a (lat, lon) subset of a (time, lat, lon) archive
+          // reads a slab, not the world.
+          NetCDFSource.tileGrid(ranges,
+            chunkDimsOpt.getOrElse(1 +: axes.drop(1).map(_.length))
+              .map(_.toLong), parallelism)
+        else {
+          // only the first axis (or nothing) is constrained: flat
+          // contiguous cell ranges, chunk-grain aligned — one slab read
+          // per variable per partition
+          val rowCells = axes.drop(1).map(_.length.toLong).product max 1L
+          val (loRow, hiRow) =
+            if (axes.isEmpty) (0L, 1L) else ranges.head
+          val (first, last) = (loRow * rowCells, (hiRow * rowCells) min total)
+          val span = (last - first) max 0L
+          if (span == 0) return Array.empty
+          val slices = math.max(1, math.min(span, parallelism)).toInt
+          val raw = (span + slices - 1) / slices
+          // round the split up to the chunk grain: a boundary inside a
+          // NetCDF-4 chunk would make BOTH partitions read+inflate it
+          val step = ((raw + v.alignCells - 1) / v.alignCells) * v.alignCells
+          // align the range start DOWN to the grain too
+          val start = (first / v.alignCells) * v.alignCells
+          (start until last by step).map(s =>
+            NcPartition(s max first, math.min(s + step, last)): InputPartition)
+            .filter(p => p.asInstanceOf[NcPartition].start <
+              p.asInstanceOf[NcPartition].end)
+            .toArray
         }
-        .map(combo => NcBoxPartition(
-          combo.map(_._1),
-          combo.map(t => (t._2 - t._1).toInt)): InputPartition)
-        .toArray
     }
   }
 
+  private def parallelism: Long = org.apache.spark.sql.SparkSession.active
+    .sparkContext.defaultParallelism.toLong
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new NcReaderFactory(path, required.fieldNames, measure)
+    new NcReaderFactory(path, required.fieldNames, measure, implicitAxis)
 }
 
 final case class NcPartition(start: Long, end: Long) extends InputPartition
@@ -458,11 +583,15 @@ final case class NcBoxPartition(origin: Seq[Long], lens: Seq[Int])
     extends InputPartition
 
 final class NcReaderFactory(path: String, projected: Array[String],
-    measure: Option[String]) extends PartitionReaderFactory {
+    measure: Option[String], implicitAxis: Option[String])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case p: NcPartition => new NcReader(path, projected, measure, p)
-      case p: NcBoxPartition => new NcBoxReader(path, projected, measure, p)
+      case p: NcBoxPartition => implicitAxis match {
+        case Some(imp) => new NcSeriesReader(path, projected, measure, imp, p)
+        case None => new NcBoxReader(path, projected, measure, p)
+      }
     }
 }
 
@@ -486,8 +615,7 @@ final class NcReader(path: String, projected: Array[String],
         // stride of this axis in the row-major flat index
         val stride = shape.drop(ax + 1).map(_.toLong).product
         val len = shape(ax)
-        val isCoordVar = view.vars.exists(v => v.name == name &&
-          v.dimIds == Seq(view.dims.indexWhere(_.name == name)))
+        val isCoordVar = NetCDFSource.isCoordVar(view, name)
         // the FIRST axis only ever touches its partition's index range
         // — read just that slice (a 10^9-step time axis would otherwise
         // cost every partition the whole coordinate array); inner axes
@@ -545,12 +673,7 @@ final class NcBoxReader(path: String, projected: Array[String],
     cells.toInt
   }
   // row-major strides WITHIN the box
-  private val boxStrides: Array[Long] = {
-    val s = new Array[Long](lens.size)
-    var acc = 1L; var d = lens.size - 1
-    while (d >= 0) { s(d) = acc; acc *= lens(d); d -= 1 }
-    s
-  }
+  private val boxStrides = NetCDFSource.rowMajorStrides(lens)
 
   private val columns: Array[Int => Double] = projected.map { name =>
     axes.indexWhere(_.name == name) match {
@@ -558,8 +681,7 @@ final class NcBoxReader(path: String, projected: Array[String],
         val stride = boxStrides(ax)
         val len = lens(ax)
         val o = part.origin(ax)
-        val isCoordVar = view.vars.exists(v => v.name == name &&
-          v.dimIds == Seq(view.dims.indexWhere(_.name == name)))
+        val isCoordVar = NetCDFSource.isCoordVar(view, name)
         val coords: Option[Array[Double]] =
           if (!isCoordVar) None
           else Some(view.slab(name, o, len))
@@ -578,6 +700,89 @@ final class NcBoxReader(path: String, projected: Array[String],
       columns.length)
   private var pos = -1
   override def next(): Boolean = { pos += 1; pos < n }
+  override def get(): InternalRow = {
+    var i = 0
+    while (i < columns.length) { row.update(i, columns(i)(pos)); i += 1 }
+    row
+  }
+  override def close(): Unit = ()
+}
+
+/** Reads one tile of the cube-shaped mode: rows are the tile's
+  * explicit cells in row-major order, each carrying its series along
+  * the implicit axis (which the tile spans whole). The measure costs
+  * one box read; every series is gathered from it by stride into a
+  * primitive array — no per-cell row is built. */
+final class NcSeriesReader(path: String, projected: Array[String],
+    measure: Option[String], implicitAxis: String, part: NcBoxPartition)
+    extends PartitionReader[InternalRow] {
+  import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+
+  private val view = NcView.open(path)
+  private val vs = NetCDFSource.gridVars(view, measure)
+  private val axes = vs.head.dimIds.map(view.dims(_))
+  private val k = NetCDFSource.implicitIndex(axes, vs, implicitAxis)
+  private val lens = part.lens
+  private val seriesLen = lens(k)
+  private val explicitAxes = axes.indices.filter(_ != k)
+  private val rows = {
+    val n = explicitAxes.map(lens(_).toLong).product
+    require(n * seriesLen <= Int.MaxValue,
+      s"NcSeriesReader: tile of ${n * seriesLen} cells exceeds Int.MaxValue")
+    n.toInt
+  }
+  // row-major strides within the box, and over the explicit axes
+  // alone (the row index)
+  private val boxStrides = NetCDFSource.rowMajorStrides(lens)
+  private val rowStrides: Map[Int, Int] = explicitAxes.zip(
+    NetCDFSource.rowMajorStrides(explicitAxes.map(lens)).map(_.toInt)).toMap
+
+  /** Box offset of row `r`'s first series element. */
+  private def base(r: Int): Int = {
+    var off = 0L
+    explicitAxes.foreach { a =>
+      off += ((r / rowStrides(a)) % lens(a)) * boxStrides(a)
+    }
+    off.toInt
+  }
+
+  private val columns: Array[Int => Any] = projected.map { name =>
+    axes.indexWhere(_.name == name) match {
+      case ax if ax >= 0 =>
+        val stride = rowStrides(ax)
+        val len = lens(ax)
+        val o = part.origin(ax)
+        val coords =
+          if (NetCDFSource.isCoordVar(view, name)) Some(view.slab(name, o, len))
+          else None
+        (r: Int) => {
+          val idx = (r / stride) % len
+          coords.map(_(idx)).getOrElse((o + idx + 1).toDouble)
+        }
+      case _ if name == s"__dim_$implicitAxis" =>
+        val coords =
+          if (NetCDFSource.isCoordVar(view, implicitAxis))
+            view.slab(implicitAxis, 0, seriesLen)
+          else Array.tabulate(seriesLen)(i => (i + 1).toDouble)
+        val arr = UnsafeArrayData.fromPrimitiveArray(coords)
+        (_: Int) => arr
+      case _ =>
+        val box = view.box(name, part.origin, lens)
+        val step = boxStrides(k).toInt
+        (r: Int) => {
+          val series = new Array[Double](seriesLen)
+          var i = 0; var src = base(r)
+          while (i < seriesLen) { series(i) = box(src); i += 1; src += step }
+          UnsafeArrayData.fromPrimitiveArray(series)
+        }
+    }
+  }
+
+  private val row =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      columns.length)
+  private var pos = -1
+  override def next(): Boolean = { pos += 1; pos < rows }
   override def get(): InternalRow = {
     var i = 0
     while (i < columns.length) { row.update(i, columns(i)(pos)); i += 1 }

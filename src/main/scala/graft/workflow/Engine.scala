@@ -1,6 +1,6 @@
 package graft.workflow
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Catalog, JobStatus, MassiveFilter, Subset}
@@ -44,6 +44,92 @@ object Engine {
       aux: Seq[graft.core.ResponseObject] = Seq.empty)
 
   final class EngineError(msg: String) extends Exception(msg)
+
+  /** A CF time axis (standard calendar) and the conversion importnc
+    * applies to its values: 'days since' with whole-day offsets ->
+    * DATE; any fractional offset (6-hourly CF files routinely use
+    * 0.25-day steps) or a finer unit -> TIMESTAMP, so distinct
+    * sub-daily points never collapse onto one date. */
+  final case class CfTime(unitSecs: Long, base: String, wholeDays: Boolean) {
+    def apply(c: Column): Column =
+      // floor, not cast: -0.5 belongs to the PRIOR day
+      if (wholeDays) date_add(to_date(lit(base)), floor(c).cast("int"))
+      else timestamp_seconds(
+        unix_timestamp(to_timestamp(lit(base))) + (c * unitSecs).cast("long"))
+
+    /** Sort key of the converted value of `x` (same order). */
+    def key(x: Double): Double =
+      if (wholeDays) math.floor(x) else (x * unitSecs).toLong.toDouble
+  }
+
+  object CfTime {
+    private val Units =
+      """(seconds|minutes|hours|days) since (\d{1,4}-\d{1,2}-\d{1,2})([ T].*)?""".r
+
+    /** The conversion of dim `d`, when its variable in `view` carries
+      * CF time units. */
+    def of(view: graft.sources.NcView, d: String): Option[CfTime] =
+      view.varAtts.getOrElse(d, Seq.empty)
+        .collectFirst { case ("units", Units(unit, base, _)) => (unit, base) }
+        .map { case (unit, base) =>
+          val secs = unit match {
+            case "seconds" => 1L
+            case "minutes" => 60L
+            case "hours" => 3600L
+            case "days" => 86400L
+          }
+          // whole days? samples the coordinate values (bounded,
+          // header-side)
+          val wholeDays = unit == "days" &&
+            (!graft.sources.NetCDFSource.isCoordVar(view, d) || {
+              val n = math.min(view.dims.find(_.name == d).get.length, 1000)
+              view.slab(d, 0, n).forall(v => v == math.floor(v))
+            })
+          CfTime(secs, base, wholeDays)
+        }
+  }
+
+  /** The implicit axis when `oph_importnc` of the file behind `view`
+    * can use the NetCDF source's cube-shaped read instead of
+    * `CubeOps.buildN`: exactly one implicit dim; a single measure
+    * variable whose axes are exactly `exp` plus that dim (no axis
+    * collapsed, no table-encoded dim variable); axis values (the
+    * coordinate variable, or the 1-based index without one) with no
+    * NaN after their CF conversion, strictly increasing on the
+    * implicit axis — so index order is `buildN`'s value order — and
+    * distinct on each explicit axis, since `buildN` merges the cells
+    * of equal keys into one row; and a storage layout the cube-shaped
+    * read suits (`NetCDFSource.seriesFits`). Axis values are read
+    * header-side, at most 2^24 per axis. */
+  def seriesAxis(view: graft.sources.NcView, measure: String,
+      exp: Seq[String], imp: Seq[String],
+      cfTime: String => Option[CfTime]): Option[String] = imp match {
+    case Seq(id) if view.vars.exists(_.name == measure) =>
+      val axes = view.varByName(measure).dimIds.map(view.dims(_))
+      val names = axes.map(_.name)
+      /** Sort keys of the axis values as `buildN` sees them, or None
+        * when any is NaN. */
+      def keys(d: graft.sources.NetCDF3.Dim): Option[Array[Double]] = {
+        val c =
+          if (graft.sources.NetCDFSource.isCoordVar(view, d.name))
+            view.slab(d.name, 0, d.length)
+          else Array.tabulate(d.length)(i => (i + 1).toDouble)
+        val k = cfTime(d.name).fold(c)(t => c.map(t.key))
+        Option.when(!k.exists(_.isNaN))(k)
+      }
+      def increasing(k: Array[Double]) =
+        (1 until k.length).forall(i => k(i - 1) < k(i))
+      def distinct(k: Array[Double]) = {
+        val s = k.clone(); java.util.Arrays.sort(s); increasing(s)
+      }
+      Option.when(names.distinct.size == names.size &&
+        (exp :+ id).sorted == names.sorted &&
+        graft.sources.NetCDFSource.seriesFits(view, measure, id) &&
+        axes.forall(_.length <= (1 << 24)) &&
+        axes.forall(d => keys(d).exists(k =>
+          if (d.name == id) increasing(k) else distinct(k))))(id)
+    case _ => None
+  }
 
   /** kill/abort/stop -> the reference's cancel_type chars
     * (`src/oph_parser.h:174-176`) — ONE table for the operator and the
@@ -1265,13 +1351,15 @@ final class Engine(
                     pinForRun(p)
                     outPids(s"${t.name}$iterSuffix") = p
                     outPids(t.name) = p
-                    // on_exit: collect this task's output for the
-                    // workflow-end exit action
-                    // (`oph_workflow_define.h:77-79`)
-                    if (t.onExit == "oph_delete" ||
-                        t.onExit == "oph_deletecontainer")
-                      exitActions += ((t.onExit, p))
                   }
+                  // on_exit: collect EVERY cube this task produced (a
+                  // fan-out's outputs, not only its last pid) for the
+                  // workflow-end exit action
+                  // (`oph_workflow_define.h:77-79`)
+                  if (t.onExit == "oph_delete" ||
+                      t.onExit == "oph_deletecontainer")
+                    (r.outputs ++ r.cubePid).distinct
+                      .foreach(p => exitActions += ((t.onExit, p)))
                   i += 1
                   settled = true
                 } catch {
@@ -1699,82 +1787,68 @@ final class Engine(
         // one header parse per source path, shared by the dim/var
         // selection, the CF time units and the global-attribute import
         val views = if (isNc) paths.map(graft.sources.NcView.open) else Seq.empty
-        val raw = if (op == "oph_importcsv")
-          spark.read.option("header", "true").option("inferSchema", "true")
-            .csv(paths: _*)
-        else if (isNc) {
-          // REAL NetCDF input (classic AND NetCDF-4) through the custom
-          // dual-format DSv2 (schema from metadata only; per-partition
-          // slab/chunk reads). A TABLE-encoded file (exportnc's layout:
-          // a synthetic record dim, every column a data variable)
-          // carries the requested dims as VARIABLES, not dims — select
-          // those alongside the measure so re-importing an exported
-          // cube restores its original axes (the importncs roundtrip).
-          val dfs = paths.zip(views).map { case (p, view) =>
-            val fileDims = view.dims.map(_.name).toSet
-            val dimVars = (exp ++ imp).filter(d =>
-              !fileDims.contains(d) && view.vars.exists(_.name == d))
-            val sel = (measure +: dimVars).distinct.mkString("|")
-            spark.read.format("netcdf3").option("measure", sel).load(p)
-          }
-          dfs.reduce(_.unionByName(_))
-        } else spark.read.parquet(paths: _*)
         // CF time axis: a dimension whose source variable carries a
         // CF units attribute ("days since 1850-01-01", "seconds since
         // ...") becomes a REAL date/timestamp column, so time_filter /
         // season subsets work on NetCDF-imported cubes exactly as on
         // native date dims. Standard (gregorian) calendar only — other
         // CF calendars (360_day, noleap) keep their numeric axis.
-        val CfUnits =
-          """(seconds|minutes|hours|days) since (\d{1,4}-\d{1,2}-\d{1,2})([ T].*)?""".r
-        val timeConverted =
-          if (!isNc || args.get("time_conversion").contains("no")) raw
-          else {
-            val calendar = args.getOrElse("calendar", "standard").toLowerCase
-            val standard = Seq("standard", "gregorian", "proleptic_gregorian")
-              .contains(calendar)
-            val view = views.head
-            (exp ++ imp).foldLeft(raw) { (df, d) =>
-              view.varAtts.getOrElse(d, Seq.empty)
-                .collectFirst { case ("units", CfUnits(unit, base, _)) =>
-                  (unit, base)
-                } match {
-                case Some((unit, base)) if standard && df.columns.contains(d) =>
-                  val secs = unit match {
-                    case "seconds" => 1L
-                    case "minutes" => 60L
-                    case "hours" => 3600L
-                    case "days" => 86400L
-                  }
-                  // 'days since' with whole-day offsets -> DATE; any
-                  // fractional offset (6-hourly CF files routinely use
-                  // 0.25-day steps) -> TIMESTAMP, so distinct sub-daily
-                  // points never collapse onto one date. The check
-                  // samples the coordinate values (bounded, header-side)
-                  val wholeDays = unit == "days" && {
-                    val dimId = view.dims.indexWhere(_.name == d)
-                    val hasCoord = dimId >= 0 && view.vars.exists(x =>
-                      x.name == d && x.dimIds == Seq(dimId))
-                    !hasCoord || {
-                      val n = math.min(view.dims(dimId).length, 1000)
-                      view.slab(d, 0, n).forall(v => v == math.floor(v))
-                    }
-                  }
-                  if (wholeDays)
-                    // floor, not cast: -0.5 belongs to the PRIOR day
-                    df.withColumn(d,
-                      date_add(to_date(lit(base)),
-                        floor(col(d)).cast("int")))
-                  else
-                    df.withColumn(d, timestamp_seconds(
-                      unix_timestamp(to_timestamp(lit(base))) +
-                        (col(d) * secs).cast("long")))
-                case _ => df
-              }
-            }
+        val cfTime: String => Option[Engine.CfTime] =
+          if (!isNc || args.get("time_conversion").contains("no") ||
+              !Seq("standard", "gregorian", "proleptic_gregorian")
+                .contains(args.getOrElse("calendar", "standard").toLowerCase))
+            _ => None
+          else Engine.CfTime.of(views.head, _)
+        def convertTime(df: DataFrame, dims: Seq[String]): DataFrame =
+          dims.foldLeft(df) { (d0, d) =>
+            if (!d0.columns.contains(d)) d0
+            else cfTime(d).fold(d0)(t => d0.withColumn(d, t(col(d))))
           }
-        val built = CubeOps.buildN(timeConverted, measure, exp, imp,
-          args.getOrElse("container", "container"), path)
+        val container = args.getOrElse("container", "container")
+        val seriesAxis =
+          if (isNc && paths.size == 1)
+            Engine.seriesAxis(views.head, measure, exp, imp, cfTime)
+          else None
+        val built = seriesAxis match {
+          case Some(id) =>
+            // grid-shaped import: the NetCDF scan emits the cube rows
+            // itself (one per explicit cell, the implicit series as an
+            // array in index order = buildN's value order), so the
+            // cube costs no groupBy and no shuffle
+            val dimCol = s"__dim_$id"
+            val scan = spark.read.format("netcdf3").option("measure", measure)
+              .option(graft.sources.NetCDFSource.CubeImplicit, id)
+              .load(paths.head)
+              .select((exp :+ measure :+ dimCol).map(col): _*)
+            val series = cfTime(id).fold(scan)(t =>
+              scan.withColumn(dimCol, transform(col(dimCol), t(_))))
+            CubeOps.fromSeries(convertTime(series, exp), measure, exp, id,
+              container, path)
+          case None =>
+            val raw = if (op == "oph_importcsv")
+              spark.read.option("header", "true").option("inferSchema", "true")
+                .csv(paths: _*)
+            else if (isNc) {
+              // REAL NetCDF input (classic AND NetCDF-4) through the
+              // custom dual-format DSv2 (schema from metadata only;
+              // per-partition slab/chunk reads). A TABLE-encoded file
+              // (exportnc's layout: a synthetic record dim, every column
+              // a data variable) carries the requested dims as
+              // VARIABLES, not dims — select those alongside the measure
+              // so re-importing an exported cube restores its original
+              // axes (the importncs roundtrip).
+              val dfs = paths.zip(views).map { case (p, view) =>
+                val fileDims = view.dims.map(_.name).toSet
+                val dimVars = (exp ++ imp).filter(d =>
+                  !fileDims.contains(d) && view.vars.exists(_.name == d))
+                val sel = (measure +: dimVars).distinct.mkString("|")
+                spark.read.format("netcdf3").option("measure", sel).load(p)
+              }
+              dfs.reduce(_.unionByName(_))
+            } else spark.read.parquet(paths: _*)
+            CubeOps.buildN(convertTime(raw, exp ++ imp), measure, exp, imp,
+              container, path)
+        }
         // subset at import (reference importnc subset_dims/subset_filter/
         // subset_type args): same semantics as a follow-up oph_subset,
         // but the predicate prunes the very first scan

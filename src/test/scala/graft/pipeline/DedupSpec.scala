@@ -160,6 +160,18 @@ class DedupSpec extends SparkSpec {
     assert(got == Map(5L -> 1L, 1L -> 1L))
   }
 
+  test("connected components refuse non-integral ids instead of dropping edges") {
+    val verts = Seq(1L, 2L).toDF("id")
+    val edges = Seq(("a", "b")).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(verts, edges))
+    assert(e.getMessage.contains("'src' must be an integral type"))
+    // integral types narrower than long are fine
+    val got = Dedup.connectedComponents(Seq(1, 2).toDF("id"),
+      Seq((1, 2)).toDF("src", "dst")).as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L))
+  }
+
   test("connected components converge on a long chain (pointer jumping)") {
     val n = 200L
     val verts = (1L to n).toDF("id")

@@ -6,6 +6,12 @@ import graft.SparkSpec
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  test("embeddingDups of an empty corpus is empty") {
+    val emb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    assert(Similarity.embeddingDups(emb, "vec_id", "embedding",
+      tau = 0.9, nBits = 8, bands = 4, dim = 4).collect().isEmpty)
+  }
+
   test("cosine of identical vectors is 1, orthogonal is 0") {
     val df = Seq((Seq(1.0f, 0.0f), Seq(0.0f, 1.0f))).toDF("a", "b")
     val (aa, ab) = df.select(

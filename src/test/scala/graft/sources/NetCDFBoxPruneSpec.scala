@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -203,6 +204,22 @@ class NetCDFBoxPruneSpec extends SparkSpec {
       .agg(org.apache.spark.sql.functions.sum(col("tas")))
       .collect()(0).getDouble(0)
     assert(total == vals.sum)
+  }
+
+  test("tile planning never exceeds the cell bound while one grain fits it") {
+    def cells(p: InputPartition) = p.asInstanceOf[NcBoxPartition].lens
+      .map(_.toLong).product
+    // 5 lat grains split 4 ways would leave 2-grain tiles of 80 cells
+    val tiles = NetCDFSource.tileGrid(Seq((0L, 10L), (0L, 20L), (0L, 1L)),
+      grain = Seq(10L, 4L, 1L), parallelism = 1, maxCells = 50)
+    assert(tiles.map(cells).toSeq == Seq.fill(5)(40L))
+    assert(tiles.map(_.asInstanceOf[NcBoxPartition].origin(1)).toSeq ==
+      Seq(0L, 4L, 8L, 12L, 16L))
+    // cube-shaped tiles along time over (4, 4, 5) chunks hold at least
+    // one chunk's lat x lon footprint times the 12-step series
+    val v = NcView.open(ndPath)
+    assert(NetCDFSource.seriesFits(v, "tas", "time", maxCells = 240))
+    assert(!NetCDFSource.seriesFits(v, "tas", "time", maxCells = 239))
   }
 
   test("classic NetCDF-3 contiguous box fallback prunes inner axes") {

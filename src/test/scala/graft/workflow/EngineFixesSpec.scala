@@ -26,6 +26,22 @@ class EngineFixesSpec extends SparkSpec {
     assert(del.status == JobStatus.Completed)
   }
 
+  test("on_exit=oph_delete drops every cube of a massive fan-out") {
+    val e = engine()
+    (1 to 3).foreach(_ => e.runDataOperator("oph_randcube",
+      Map("nrows" -> "4", "array_length" -> "2", "container" -> "c")))
+    val (cubes, catalog) = (e.cubeCount, e.catalog.allCubes.map(_.id).toSet)
+    val res = e.run(Workflow.parse("""{
+      "name": "wf", "tasks": [
+        {"name": "fan", "operator": "oph_reduce", "on_exit": "oph_delete",
+         "arguments": ["cube=[container=c;level=0]", "operation=sum"]}
+      ]}"""))
+    assert(res("fan").status == JobStatus.Completed, res("fan").message)
+    assert(res("fan").outputs.size == 3)
+    assert(e.cubeCount == cubes)
+    assert(e.catalog.allCubes.map(_.id).toSet == catalog)
+  }
+
   test("massive run=no lists matches without executing") {
     val e = engine()
     (1 to 2).foreach(_ => e.runDataOperator("oph_randcube",
